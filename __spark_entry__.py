@@ -158,11 +158,16 @@ def q_series_stats(spark, sf_dir):
 SQL_SERIES_STATS = f"WITH {SQL_TOKENS} SELECT doc_id, source, n_tok AS point_count FROM tokens"
 
 
+def _rollup_tier(spark, sf_dir: str, tier: int) -> DataFrame:
+    """One tier of ``tiered_rollups`` (only that tier's branch runs)."""
+    from tsc_spark.operators.rollup import tiered_rollups
+
+    return tiered_rollups(_tokens(spark, sf_dir), with_gapfill=False, tiers=(tier,))
+
+
 def _rollup_query(tier: int):
     def q(spark, sf_dir):
-        from tsc_spark.operators.rollup import tiered_rollups
-
-        df = tiered_rollups(_tokens(spark, sf_dir), with_gapfill=False)[tier]
+        df = _rollup_tier(spark, sf_dir, tier)
         return df.select(
             "doc_id",
             F.col("window_idx").cast("long").alias("window_idx"),
@@ -530,9 +535,9 @@ FROM m JOIN halves USING (doc_id)"""
 
 
 def q_normalized_scores(spark, sf_dir):
-    from tsc_spark.operators.rollup import normalize_window_scores, tiered_rollups
+    from tsc_spark.operators.rollup import normalize_window_scores
 
-    t1 = tiered_rollups(_tokens(spark, sf_dir), with_gapfill=False)[1]
+    t1 = _rollup_tier(spark, sf_dir, 1)
     return normalize_window_scores(t1).select(
         "doc_id",
         F.col("window_idx").cast("long").alias("window_idx"),
@@ -1268,9 +1273,7 @@ FROM tokens"""
 def q_recency_weights(spark, sf_dir):
     """Recency curve over rollup windows (reference ...pcm.jl:530-536,
     r=0.5 → span 8): w = 0.5 + 0.5*exp(-age/8)."""
-    from tsc_spark.operators.rollup import tiered_rollups
-
-    t1 = tiered_rollups(_tokens(spark, sf_dir), with_gapfill=False)[1]
+    t1 = _rollup_tier(spark, sf_dir, 1)
     w = F.round(
         F.lit(0.5) + F.lit(0.5) * F.exp(-(F.col("max_w") - F.col("window_idx")) / F.lit(8.0)),
         6,
@@ -1303,9 +1306,7 @@ def q_retention_sweep(spark, sf_dir):
     """TTL sweep over the tier-1 rollup: keep each doc's last 4 windows
     (north-rule retention leg; reference analogue seed_influx.jl:152-177)."""
     from tsc_spark.operators.retention import retention_sweep
-    from tsc_spark.operators.rollup import tiered_rollups
-
-    t1 = tiered_rollups(_tokens(spark, sf_dir), with_gapfill=False)[1]
+    t1 = _rollup_tier(spark, sf_dir, 1)
     return retention_sweep(t1, {1: 4}).select(
         "doc_id",
         F.col("window_idx").cast("long").alias("window_idx"),
@@ -1333,9 +1334,7 @@ WHERE window_idx >= max_w - 4 + 1"""
 def q_retention_plan(spark, sf_dir):
     """Segment-level sweep plan: drop (manifest-only) / keep / rewrite."""
     from tsc_spark.operators.retention import retention_plan
-    from tsc_spark.operators.rollup import tiered_rollups
-
-    t1 = tiered_rollups(_tokens(spark, sf_dir), with_gapfill=False)[1]
+    t1 = _rollup_tier(spark, sf_dir, 1)
     return retention_plan(t1, {1: 6}, segment_size=4).select(
         F.col("tier").cast("long").alias("tier"),
         "doc_id",
@@ -1530,9 +1529,9 @@ FROM chords c LEFT JOIN pair_sums p ON c.doc_id = p.doc_id"""
 def q_normalize_combine(spark, sf_dir):
     """End-to-end F5+F6: reliability-weighted combined complexity score
     per rollup window (reference controller:2095-2156)."""
-    from tsc_spark.operators.rollup import combined_window_scores, tiered_rollups
+    from tsc_spark.operators.rollup import combined_window_scores
 
-    t1 = tiered_rollups(_tokens(spark, sf_dir), with_gapfill=False)[1]
+    t1 = _rollup_tier(spark, sf_dir, 1)
     return combined_window_scores(t1)
 
 
@@ -1989,12 +1988,11 @@ def q_bucketed_rollup_join(spark, sf_dir):
     import shutil
     import tempfile
 
-    from tsc_spark.operators.rollup import tiered_rollups
     from tsc_spark.plans.bucketing import bucketed_join, write_bucketed
 
     toks = _tokens(spark, sf_dir).select("doc_id", "n_tok", "source")
     per_doc = (
-        tiered_rollups(_tokens(spark, sf_dir), with_gapfill=False)[1]
+        _rollup_tier(spark, sf_dir, 1)
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_windows"),

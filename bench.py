@@ -166,9 +166,7 @@ def run_pipeline_bench(
         # 4.6M pts/s cold vs ~11M warm on identical code).
         try:
             _warmup(spark)
-            wtiers = tiered_rollups(toks.limit(2048), with_gapfill=True)
-            for tier in (0, 1, 2):
-                _force(wtiers[tier])
+            _force(tiered_rollups(toks.limit(2048), with_gapfill=True))
         except Exception as e:
             print(f"# pipeline warmup failed: {type(e).__name__}: {e}",
                   file=sys.stderr)
@@ -179,9 +177,7 @@ def run_pipeline_bench(
         elapsed = None
         for _ in range(max(repeats, 1)):
             t0 = time.perf_counter()
-            tiers = tiered_rollups(toks, with_gapfill=True)
-            for tier in (0, 1, 2):
-                _force(tiers[tier])
+            _force(tiered_rollups(toks, with_gapfill=True))
             el = time.perf_counter() - t0
             elapsed = el if elapsed is None or el < elapsed else elapsed
         return {

@@ -34,6 +34,13 @@ DEFAULT_QUERIES = [
 ]
 
 
+def _plan(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue().rstrip()
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     names = sys.argv[2:] or DEFAULT_QUERIES
@@ -60,12 +67,20 @@ def main() -> None:
             if name not in qs:
                 print(f"unknown query skipped: {name}", file=sys.stderr)
                 continue
-            df = qs[name](spark, sf_dir)
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                df.explain("formatted")
-            out.append(f"## {name}\n\n```\n{buf.getvalue().rstrip()}\n```\n")
+            out.append(f"## {name}\n\n```\n{_plan(qs[name](spark, sf_dir))}\n```\n")
             written += 1
+            if name == "rollup_tier2":
+                # the query reads one tier, so the optimizer prunes the
+                # tier-0 branch; the full pass is what pipelines and the
+                # bench run — one Union of posexplode and MapInArrow
+                from tsc_spark.operators.rollup import tiered_rollups
+
+                full = tiered_rollups(entry._tokens(spark, sf_dir))
+                out.append(
+                    "## tiered_rollups (all tiers in one frame: one job, "
+                    f"two scans)\n\n```\n{_plan(full)}\n```\n"
+                )
+                written += 1
             if name == "dedup_groups":
                 # at gate scale the CC hybrid finishes the small graph on
                 # the driver, so the default plan is just an ExistingRDD
@@ -74,14 +89,10 @@ def main() -> None:
                 prior_thr = os.environ.get("TSC_CC_LOCAL_THRESHOLD")
                 os.environ["TSC_CC_LOCAL_THRESHOLD"] = "0"
                 try:
-                    ddf = qs[name](spark, sf_dir)
-                    buf = io.StringIO()
-                    with redirect_stdout(buf):
-                        ddf.explain("formatted")
                     out.append(
                         "## dedup_groups (distributed pointer-jump CC, "
                         "`TSC_CC_LOCAL_THRESHOLD=0` — the at-scale path)"
-                        f"\n\n```\n{buf.getvalue().rstrip()}\n```\n"
+                        f"\n\n```\n{_plan(qs[name](spark, sf_dir))}\n```\n"
                     )
                     written += 1
                 finally:
@@ -103,15 +114,12 @@ def main() -> None:
                     [("a", "b"), ("b", "a"), ("a", "a"), ("b", "b")],
                     "src string, dst string",
                 )
-                buf = io.StringIO()
-                with redirect_stdout(buf):
-                    _cc_round(e2, lab).explain("formatted")
                 out.append(
                     "## dedup_groups per-round body (`_cc_round`: "
                     "neighbor-min + double pointer jump — the "
                     "constant-size job repeated O(log diameter) times; "
                     "inputs are checkpointed RDDs at runtime)"
-                    f"\n\n```\n{buf.getvalue().rstrip()}\n```\n"
+                    f"\n\n```\n{_plan(_cc_round(e2, lab))}\n```\n"
                 )
                 written += 1
     finally:

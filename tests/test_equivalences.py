@@ -4,9 +4,8 @@ Two independent implementations of the same operator must agree exactly;
 hypothesis drives the series shapes.
 """
 
-import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 token_series = st.lists(st.integers(min_value=-50, max_value=50), max_size=40)
@@ -33,8 +32,8 @@ def test_poly_singleton_equivalence_property(toks):
 
 
 class TestRollupPathEquivalence:
-    """The three tier-rollup implementations (HOF array path, numpy
-    reduceat path, explode+groupBy) emit identical rows."""
+    """Each upper tier of the one-pass Arrow kernel (``tiered_rollups``)
+    emits the same rows as explode + groupBy at that tier's stride."""
 
     @pytest.fixture(scope="class")
     def toks(self, spark):
@@ -44,27 +43,80 @@ class TestRollupPathEquivalence:
         df.cache().count()
         return df
 
-    @pytest.mark.parametrize("stride,tier", [(8, 1), (64, 2), (5, 9)])
+    @pytest.mark.parametrize("stride,tier", [(8, 1), (64, 2)])
     def test_three_paths_agree(self, spark, toks, stride, tier):
+        from tsc_spark.config import TIER_STRIDES
         from tsc_spark.operators.rollup import (
             explode_points,
-            rollup_arrays,
-            rollup_arrays_np,
             rollup_points,
+            tiered_rollups,
         )
 
+        assert TIER_STRIDES[tier] == stride
         cols = ["doc_id", "window_idx", "agg_count", "agg_min", "agg_max", "agg_sum", "tier"]
 
         def rows(df):
-            return sorted(
-                tuple(r) for r in df.select(*cols).collect()
-            )
+            return sorted(tuple(r) for r in df.select(*cols).collect())
 
-        hof = rows(rollup_arrays(toks, stride, tier))
-        npp = rows(rollup_arrays_np(toks, stride, tier))
+        kernel = rows(tiered_rollups(toks, with_gapfill=False, tiers=(tier,)))
         grp = rows(rollup_points(explode_points(toks), stride, tier))
-        assert hof == npp == grp
-        assert len(hof) > 0
+        assert kernel == grp
+        assert len(kernel) > 0
+
+
+INT32_MIN, INT32_MAX = -(2**31), 2**31 - 1
+int32_tokens = st.one_of(
+    st.sampled_from([INT32_MIN, INT32_MAX, 0]),
+    st.integers(min_value=INT32_MIN, max_value=INT32_MAX),
+)
+# window-boundary lengths around both strides (8 and 64), plus any length
+doc_tokens = st.one_of(
+    st.none(),
+    st.one_of(
+        st.sampled_from([0, 7, 8, 9, 63, 64, 65]), st.integers(0, 140)
+    ).flatmap(lambda n: st.lists(int32_tokens, min_size=n, max_size=n)),
+)
+# every boundary length, empty and NULL arrays and int32 extremes at once
+EDGE_DOCS = [None, [], [INT32_MAX] * 65, [INT32_MIN] * 64] + [
+    list(range(n)) for n in (7, 8, 9, 63)
+]
+
+
+@settings(max_examples=15, deadline=None)
+@example(docs=EDGE_DOCS)
+@given(docs=st.lists(doc_tokens, min_size=1, max_size=8))
+def test_tiered_rollups_equal_oracle_property(spark, docs):
+    """Every tier of ``tiered_rollups`` equals the explode + groupBy
+    oracle.  The drawn docs repeat over 520 rows in one partition, so
+    each example runs three Arrow batches of mixed lengths."""
+    import pyarrow as pa
+
+    from tsc_spark.config import ARROW_MAX_RECORDS_PER_BATCH, TIER_STRIDES
+    from tsc_spark.operators.rollup import explode_points, rollup_points, tiered_rollups
+
+    n_rows = 2 * ARROW_MAX_RECORDS_PER_BATCH + 8
+    # built from an Arrow table: a local relation, so each job below does
+    # not re-run the Python row conversion
+    df = spark.createDataFrame(
+        pa.table(
+            {
+                "doc_id": [f"d{i:04d}" for i in range(n_rows)],
+                "tokens": pa.array(
+                    [docs[i % len(docs)] for i in range(n_rows)], pa.list_(pa.int32())
+                ),
+            }
+        )
+    ).coalesce(1)
+    cols = ["doc_id", "window_idx", "agg_count", "agg_min", "agg_max", "agg_sum", "tier"]
+    points = explode_points(df)
+    want = None
+    for tier, stride in TIER_STRIDES.items():
+        rows = rollup_points(points, stride, tier)
+        want = rows if want is None else want.unionByName(rows)
+    got = tiered_rollups(df, with_gapfill=False)
+    assert sorted(map(tuple, got.select(*cols).collect())) == sorted(
+        map(tuple, want.select(*cols).collect())
+    )
 
 
 @settings(deadline=None, max_examples=40)

@@ -172,19 +172,34 @@ def test_retention_rewrite_preserves_tier_column(spark, base_dir):
     assert read_tier(spark, base_dir, 0).filter("tier IS NULL").count() == 0
 
 
-def test_rollup_from_lower_tier_equals_direct(spark, tokens_df):
-    """Continuous-aggregate compaction: composing tier-2 from tier-1
-    (8 windows -> 1) is exact — identical to computing tier-2 directly
-    from the token arrays."""
-    from tsc_spark.operators.rollup import rollup_from_lower_tier, tiered_rollups
+def test_stored_n_tok_never_disagrees_with_tokens(spark, tmp_path):
+    """A stored ``n_tok`` of 3 over 9 tokens is re-derived on read: the
+    tiers equal the oracle and the manifest watermarks equal the max
+    window_idx actually written."""
+    import pyspark.sql.functions as F
 
-    tiers = tiered_rollups(tokens_df, with_gapfill=False)
-    direct = {
-        (r.doc_id, r.window_idx): (r.agg_count, r.agg_min, r.agg_max, r.agg_sum)
-        for r in tiers[2].collect()
-    }
-    composed = {
-        (r.doc_id, r.window_idx): (r.agg_count, r.agg_min, r.agg_max, r.agg_sum)
-        for r in rollup_from_lower_tier(tiers[1], 8, 2).collect()
-    }
-    assert composed == direct
+    from tsc_spark.operators.rollup import explode_points, rollup_points, tiered_rollups
+    from tsc_spark.sources.tokens import read_tokens
+
+    raw = str(tmp_path / "raw.parquet")
+    spark.createDataFrame(
+        [("d", list(range(9)), 3, "s")],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    ).write.parquet(raw)
+    toks = read_tokens(spark, raw)
+    assert toks.collect()[0].n_tok == 9
+
+    cols = ["doc_id", "window_idx", "agg_count", "agg_min", "agg_max", "agg_sum"]
+    got = tiered_rollups(toks, with_gapfill=False)
+    for tier, stride in ((0, 1), (1, 8), (2, 64)):
+        want = rollup_points(explode_points(toks), stride, tier)
+        assert sorted(
+            map(tuple, got.filter(F.col("tier") == tier).select(*cols).collect())
+        ) == sorted(map(tuple, want.select(*cols).collect()))
+
+    base = str(tmp_path / "pipe")
+    ingest(spark, toks, base, n_buckets=1)
+    (manifest,) = run_pipeline(spark, base, with_timeline=False, with_encoded=False)
+    for tier in (0, 1, 2):
+        written = read_tier(spark, base, tier).agg(F.max("window_idx")).collect()[0][0]
+        assert manifest["watermarks"][f"tier{tier}_max_window_idx"] == written

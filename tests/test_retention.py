@@ -84,7 +84,7 @@ class TestApplyRetention:
 
         # expected survivors: recompute the sweep from scratch per tier
         for tier in (0, 1, 2):
-            t_all = tiered_rollups(tokens_df, with_gapfill=True)[tier]
+            t_all = tiered_rollups(tokens_df, with_gapfill=True).filter(F.col("tier") == tier)
             expected = retention_sweep(t_all, DEFAULT_RETENTION_POLICY).count()
             assert after[tier] == expected
             assert after[tier] <= before[tier]
@@ -132,7 +132,8 @@ class TestStreamingRetention:
         expected = sorted(
             (r.doc_id, r.window_idx, r.agg_count, r.agg_min, r.agg_max, r.agg_sum)
             for r in retention_sweep(
-                tiered_rollups(tokens_df, with_gapfill=False)[1], {1: 3}
+                tiered_rollups(tokens_df, with_gapfill=False).filter(F.col("tier") == 1),
+                {1: 3},
             ).collect()
         )
         assert got == expected

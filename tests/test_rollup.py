@@ -28,7 +28,8 @@ def _oracle_rollup(tokens, stride):
 
 @pytest.fixture(scope="module")
 def rollups(spark, tokens_df):
-    return {t: df.collect() for t, df in tiered_rollups(tokens_df).items()}
+    rows = tiered_rollups(tokens_df).collect()
+    return {t: [r for r in rows if r.tier == t] for t in TIER_STRIDES}
 
 
 class TestTierRollups:
@@ -49,6 +50,16 @@ class TestTierRollups:
         for tier in (0, 1, 2):
             assert all(not r.gapfilled for r in rollups[tier])
 
+    @pytest.mark.parametrize("tier", [0, 1, 2])
+    def test_tiers_builds_only_the_needed_branch(self, rollups, tokens_df, tier):
+        # one tier alone equals that tier of the full frame, and runs only
+        # its own branch: tier 0 never starts Python, tiers 1/2 never explode
+        alone = tiered_rollups(tokens_df, tiers=(tier,))
+        assert sorted(alone.collect()) == sorted(rollups[tier])
+        plan = alone._jdf.queryExecution().executedPlan().toString()
+        assert ("MapInArrow" in plan) == (tier != 0)
+        assert ("posexplode" in plan) == (tier == 0)
+
     def test_tier2_composes_from_tier1(self, spark, tokens_df):
         # composing 8×8 from tier-1 must equal a direct 64× rollup
         points = explode_points(tokens_df)
@@ -58,7 +69,9 @@ class TestTierRollups:
         }
         composed = {
             (r.doc_id, r.window_idx): (r.agg_count, r.agg_min, r.agg_max, r.agg_sum)
-            for r in tiered_rollups(tokens_df, with_gapfill=False)[2].collect()
+            for r in tiered_rollups(tokens_df, with_gapfill=False)
+            .filter(F.col("tier") == 2)
+            .collect()
         }
         assert composed == direct
 
@@ -166,3 +179,24 @@ def test_synth_tokens_skewed_parallelism_invariant(spark):
     assert ra == rb
     heavy = [r for r in ra if r[3] == "heavy"]
     assert len(heavy) == 4 and all(r[2] == 64 for r in heavy)
+
+
+def test_null_token_element_rejected_on_every_tier_and_in_stream(spark, tmp_path):
+    """``[1, NULL, 3]`` breaks the token contract: every tier and the
+    streaming refresh fail with an error naming the rule."""
+    from tsc_spark.streaming.rollup_stream import run_rollup_stream
+
+    bad = spark.createDataFrame(
+        [("ok", [4, 5], 2, "s"), ("bad", [1, None, 3], 3, "s")],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    for tier in TIER_STRIDES:  # each tier's branch alone, then all at once
+        with pytest.raises(Exception, match="NULL token element"):
+            tiered_rollups(bad, tiers=(tier,)).collect()
+    with pytest.raises(Exception, match="NULL token element"):
+        tiered_rollups(bad).collect()
+
+    src = str(tmp_path / "src")
+    bad.write.parquet(src)
+    with pytest.raises(Exception, match="NULL token element"):
+        run_rollup_stream(spark, src, str(tmp_path / "out"), str(tmp_path / "ckpt"))

@@ -118,13 +118,12 @@ def _process_bucket(
     max_n_tok = int(stats["max_n_tok"] or 0)
     watermarks: dict[str, int] = {}
 
-    # shuffle-free array-path rollup: windows never cross rows, so every
-    # tier is a narrow per-row transform (see operators.rollup.rollup_arrays)
-    tiers = tiered_rollups(df, with_gapfill=True)
-    for tier, tdf in tiers.items():
+    # shuffle-free rollup, one write per tier: the layout stays
+    # rollup/tier=t/bucket=b with the tier column inside every file
+    # (apply_retention and read_tier rely on it)
+    for tier, stride in TIER_STRIDES.items():
         path = os.path.join(base_dir, "rollup", f"tier={tier}", f"bucket={bucket}")
-        tdf.write.mode("overwrite").parquet(path)
-        stride = TIER_STRIDES[tier]
+        tiered_rollups(df, tiers=(tier,)).write.mode("overwrite").parquet(path)
         wm = -(-max_n_tok // stride) - 1 if max_n_tok > 0 else -1
         watermarks[f"tier{tier}_max_window_idx"] = wm
 

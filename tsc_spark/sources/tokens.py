@@ -5,6 +5,19 @@ table of pre-tokenized training sequences::
 
     tokens(doc_id: string, tokens: array<int>, n_tok: int, source: string)
 
+Token contract rules every reader output obeys or fails on:
+
+* ``n_tok`` is always ``size(tokens)``, derived here; a stored ``n_tok``
+  is never trusted, so it cannot disagree with the array.
+* A token array may be empty or NULL (the doc has no points), but its
+  elements must not be NULL.  A NULL element is rejected where the
+  rollup touches the values (``operators.rollup.NULL_TOKEN_MESSAGE``):
+  the tier-1/2 kernel checks the Arrow child array's null count and
+  tier 0 checks each exploded token.  There is no separate check here:
+  parquet reads ``tokens`` back as ``containsNull=true`` whatever was
+  written, so a type-based skip would never fire and a per-element
+  check would cost every scan.
+
 On a real cluster that table lives in an Iceberg catalog and is read via
 ``spark.read.table("catalog.db.tokens")`` (or ``format("iceberg")``),
 which gives partition pruning, hidden-partitioning pushdown, and
@@ -65,8 +78,9 @@ def canonicalize_tokens(df: DataFrame) -> DataFrame:
 
     Requires ``doc_id`` and ``tokens`` (integral element type — a
     string/double array would cast to nulls or silently truncate, so it
-    is rejected instead); derives ``n_tok`` (=size(tokens)) and
-    ``source`` (='unknown') when the physical table lacks them, and pins
+    is rejected instead); derives ``n_tok`` (=size(tokens), whether or
+    not the table stores one) and ``source`` (='unknown') when the
+    physical table lacks it, and pins
     the exact types (doc_id string, tokens array<int>, n_tok int) so
     operator code never branches on storage dialects.
     """
@@ -86,11 +100,6 @@ def canonicalize_tokens(df: DataFrame) -> DataFrame:
             f"found {tok_field.simpleString()} — a non-integral cast would "
             "null or truncate token values silently"
         )
-    n_tok = (
-        F.col("n_tok").cast("int")
-        if "n_tok" in cols
-        else F.size("tokens")
-    )
     source = F.col("source") if "source" in cols else F.lit("unknown")
     if isinstance(tok_field.elementType, T.LongType):
         # with ANSI mode off, bigint→int silently WRAPS values above
@@ -116,7 +125,7 @@ def canonicalize_tokens(df: DataFrame) -> DataFrame:
     return df.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         tokens_col.alias("tokens"),
-        n_tok.alias("n_tok"),
+        F.size("tokens").alias("n_tok"),
         source.cast("string").alias("source"),
     )
 
