@@ -2,12 +2,9 @@
 
 The driver's correctness harness checks exactly the FIRST 50 entries of
 queries() in dict order (observed: CORRECTNESS_r01 had 47 rows for 47
-queries, CORRECTNESS_r02 had the first 50 of 62).  With more queries
-than slots the window ROTATES each round (round-3 verdict directive):
-every tail entry must have been driver-green in the immediately
-previous round AND sit on code untouched in the current round.  These
-tests pin the current round's window so a refactor can't silently push
-a due query out of it.
+queries, CORRECTNESS_r02 had the first 50 of 62).  The surface is kept
+at or under 50 queries, so every query is inside that window every
+round and dict order carries no meaning.
 """
 
 import os
@@ -15,58 +12,17 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# queries that MUST hold a first-50 slot this round (round 5): the 16
-# dark in the round-4 driver gate (the r4 verdict's rotation list), the
-# new bucketed-join evidence query, and every query whose implementation
-# changed this round (operators/matching.py grouped containment filter,
-# operators/dedup.py checkpointed self-join inputs, the entry file's
-# stream-source snapshot + events materialization)
-ROUND_DUE = [
-    # dark in round 4 — rotated in
-    "codec_roundtrip", "filter_isin", "octave_normalize", "recency_weights",
-    "retention_sweep", "chord_roughness", "media_stats", "image_features",
-    "asof_join", "range_join", "sessionize", "collapse_max", "kmv_distinct",
-    "stable_sample", "stable_id", "top_customers",
-    # new this round
-    "bucketed_rollup_join",
-    # operators/matching.py changed
-    "window_matches", "octave_matches", "query_matches", "match_scores",
-    "note_vol_matches", "stm_interference",
-    # operators/dedup.py changed
-    "lsh_dedup_pairs", "dedup_groups", "ngram_jaccard",
-    "minhash_signatures", "simhash", "exact_dups", "decontaminate",
-    # entry-file stream plumbing changed
-    "rollup_tier1_streamed", "events_hourly_streamed", "retention_streamed",
-    "cluster_timeline_streamed",
-]
-
-# the only queries allowed in the dark tail: driver-green in round 4 AND
-# on files untouched this round (similarity / text / sketch-native /
-# dissonance-native / native-SQL paths)
-ROTATABLE_TAIL = [
-    "normalized_scores", "topk_longest", "source_counts",
-    "adjacent_roughness", "video_frames", "pricing_summary",
-    "suppliers_by_region", "events_hourly", "corr_qty_price",
-    "ann_topk_ivf", "ann_topk_lsh", "cosine_topk",
-    "quality_scores", "lang_id", "fingerprint", "repetition_stats",
-    "pii_stats",
-]
+DRIVER_WINDOW = 50
 
 
-def test_due_queries_inside_driver_window():
+def test_every_query_inside_driver_window():
     import __spark_entry__ as m
 
-    first50 = set(list(m.queries())[:50])
-    missing = [q for q in ROUND_DUE if q not in first50]
-    assert not missing, f"due queries outside the driver's 50-row window: {missing}"
-
-
-def test_dark_tail_is_rotatable_only():
-    import __spark_entry__ as m
-
-    tail = list(m.queries())[50:]
-    bad = [q for q in tail if q not in ROTATABLE_TAIL]
-    assert not bad, f"tail entries lacking fresh prior-round evidence: {bad}"
+    n = len(m.queries())
+    assert n <= DRIVER_WINDOW, (
+        f"{n} queries but the driver checks only the first {DRIVER_WINDOW}: "
+        f"{list(m.queries())[DRIVER_WINDOW:]} would never be checked"
+    )
 
 
 def test_every_query_has_oracle_or_documented_fixture():

@@ -119,6 +119,83 @@ def test_tiered_rollups_equal_oracle_property(spark, docs):
     )
 
 
+# a doc is (tokens, keep): keep[i] False deletes point i from the stream
+sparse_doc = st.one_of(
+    st.sampled_from([0, 7, 8, 9, 63, 64, 65]), st.integers(0, 140)
+).flatmap(
+    lambda n: st.tuples(
+        st.lists(int32_tokens, min_size=n, max_size=n),
+        st.lists(st.booleans(), min_size=n, max_size=n),
+    )
+)
+# boundary lengths with a deleted first window, a fully deleted doc, a
+# deleted one-point last window and an empty doc
+SPARSE_EDGE_DOCS = [
+    ([], []),
+    (list(range(65)), [i >= 8 for i in range(65)]),
+    ([INT32_MIN] * 64, [False] * 64),
+    (list(range(9)), [True] * 8 + [False]),
+    ([INT32_MAX] * 7, [i % 2 == 0 for i in range(7)]),
+    (list(range(63)), [True] * 63),
+]
+
+
+def _sparse_oracle(docs, stride, tier):
+    """gapfill rows over the surviving points, in pure Python."""
+    out = []
+    for i, (toks, keep) in enumerate(docs):
+        for w in range(-(-len(toks) // stride)):
+            lo, hi = w * stride, min(len(toks), (w + 1) * stride)
+            kept = [toks[j] for j in range(lo, hi) if keep[j]]
+            if kept:
+                out.append((f"d{i}", tier, w, len(kept), min(kept), max(kept), sum(kept), False))
+            else:
+                out.append((f"d{i}", tier, w, 0, None, None, None, True))
+    return sorted(out, key=repr)
+
+
+@settings(max_examples=15, deadline=None)
+@example(docs=SPARSE_EDGE_DOCS)
+@given(docs=st.lists(sparse_doc, min_size=1, max_size=6))
+def test_sparse_gapfill_equals_oracle_property(spark, docs):
+    """The sparse path: ``rollup_points`` over a point stream with random
+    points deleted, then ``gapfill`` against the token table, equals a
+    pure-Python rollup of the surviving points.  A window with no
+    surviving point is emitted gap-filled, and each doc's last emitted
+    window is ceil(n_tok / stride) - 1, the bound the pipeline
+    watermark is derived from."""
+    from pyspark.sql import functions as F
+
+    from tsc_spark.config import TIER_STRIDES
+    from tsc_spark.operators.rollup import explode_points, gapfill, rollup_points
+
+    toks = spark.createDataFrame(
+        [(f"d{i}", t) for i, (t, _) in enumerate(docs)],
+        "doc_id string, tokens array<int>",
+    ).withColumn("n_tok", F.size("tokens"))
+    deleted = spark.createDataFrame(
+        [(f"d{i}", j) for i, (_, keep) in enumerate(docs) for j, k in enumerate(keep) if not k],
+        "doc_id string, point_index int",
+    )
+    points = explode_points(toks).join(deleted, ["doc_id", "point_index"], "left_anti")
+    cols = ["doc_id", "tier", "window_idx", "agg_count", "agg_min", "agg_max", "agg_sum", "gapfilled"]
+    for tier in (1, 2):  # strides 8 and 64
+        stride = TIER_STRIDES[tier]
+        got = sorted(
+            map(tuple, gapfill(rollup_points(points, stride, tier), toks, stride, tier)
+                .select(*cols).collect()),
+            key=repr,
+        )
+        assert got == _sparse_oracle(docs, stride, tier)
+        last = {}
+        for r in got:
+            last[r[0]] = max(last.get(r[0], -1), r[2])
+        want_last = {
+            f"d{i}": -(-len(t) // stride) - 1 for i, (t, _) in enumerate(docs) if t
+        }
+        assert last == want_last
+
+
 @settings(deadline=None, max_examples=40)
 @given(
     st.lists(st.integers(min_value=0, max_value=23), min_size=0, max_size=40),

@@ -11,7 +11,6 @@ from tsc_spark.operators.rollup import (
     gapfill,
     gapfill_locf,
     rollup_points,
-    series_stats,
     tiered_rollups,
 )
 
@@ -113,13 +112,6 @@ class TestGapfill:
             assert by_w[w].agg_sum == 28
             assert by_w[w].agg_count == 0  # count stays 0: window truly empty
         assert by_w[4].agg_min == 32  # real data resumes
-
-
-class TestSeriesStats:
-    def test_counts(self, spark, tokens_df, tokens_rows):
-        got = {r.doc_id: r.point_count for r in series_stats(tokens_df).collect()}
-        for doc_id, toks, _src in tokens_rows:
-            assert got[doc_id] == len(toks)
 
 
 def test_exact_window_matches_null_tokens_never_match(spark):

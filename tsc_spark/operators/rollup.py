@@ -45,9 +45,7 @@ __all__ = [
     "gapfill",
     "gapfill_locf",
     "contextual_width",
-    "normalize_window_scores",
     "combined_window_scores",
-    "series_stats",
 ]
 
 
@@ -337,35 +335,6 @@ def contextual_width(tokens_df: DataFrame, min_width: float = 1.0) -> DataFrame:
     )
 
 
-def normalize_window_scores(rollup_df: DataFrame) -> DataFrame:
-    """Min-max normalize each doc's window sums with the reference's
-    reliability weight (normalize_scores, /root/reference/src/controllers/
-    time_series_controller.jl:2095-2117): weight 0.0 when all values are
-    equal, 0.2 when only two distinct values, 1.0 otherwise.
-
-    Expects dense windows (raw rollup or LOCF-filled): a NULL ``agg_sum``
-    from un-filled gap rows would propagate to a NULL score."""
-    w = Window.partitionBy("doc_id")
-    vmin = F.min("agg_sum").over(w)
-    vmax = F.max("agg_sum").over(w)
-    nuniq = F.size(F.collect_set("agg_sum").over(w))
-    # degenerate all-equal case fills 0.5, exactly like the reference
-    # (fill(0.5, ...), controller :2105-2109) — the 0-weight reliability
-    # is what nullifies it downstream, not the normalized value itself
-    norm = F.when(vmax > vmin, (F.col("agg_sum") - vmin) / (vmax - vmin)).otherwise(
-        F.lit(0.5)
-    )
-    reliability = (
-        F.when(nuniq <= 1, F.lit(0.0)).when(nuniq == 2, F.lit(0.2)).otherwise(F.lit(1.0))
-    )
-    return rollup_df.select(
-        "doc_id",
-        "window_idx",
-        F.round(norm, 6).alias("norm_score"),
-        reliability.alias("reliability"),
-    )
-
-
 def combined_window_scores(rollup_df: DataFrame) -> DataFrame:
     """normalize_scores + combine_complexity_metric_scores, relationally.
 
@@ -404,15 +373,4 @@ def combined_window_scores(rollup_df: DataFrame) -> DataFrame:
         "doc_id",
         F.col("window_idx").cast("long").alias("window_idx"),
         F.round(combined, 6).alias("combined_score"),
-    )
-
-
-def series_stats(tokens_df: DataFrame) -> DataFrame:
-    """Per-series stats scan (reference _fetch_series_stats*,
-    /root/reference/src/controllers/time_series_controller.jl:648-691):
-    series list + point counts, computed without exploding (F.size)."""
-    return tokens_df.select(
-        "doc_id",
-        "source",
-        F.size("tokens").alias("point_count"),
     )

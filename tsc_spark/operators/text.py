@@ -16,8 +16,6 @@ __all__ = [
     "tokenize_documents",
     "token_stats",
     "quality_scores",
-    "lang_id",
-    "fingerprint",
     "repetition_stats",
     "pii_stats",
 ]
@@ -79,20 +77,6 @@ def quality_scores(docs: DataFrame) -> DataFrame:
         F.round(
             (n_chars - n_words + 1) / F.greatest(n_words, F.lit(1)), 6
         ).alias("mean_word_len"),
-    )
-
-
-def lang_id(docs: DataFrame) -> DataFrame:
-    """N-gram-free language heuristic: stopword hit ratio ≥ 2% → 'en'.
-
-    (Real model-based lang-id would be a broadcast dictionary / model in
-    a pandas UDF; the decision plumbing is what matters here.)"""
-    words = F.split(F.col("text"), " ")
-    stop_hits = F.size(F.filter(words, lambda w: F.lower(w).isin(STOPWORDS)))
-    ratio = stop_hits / F.greatest(F.size(words), F.lit(1))
-    return docs.select(
-        "doc_id",
-        F.when(ratio >= 0.02, F.lit("en")).otherwise(F.lit("unknown")).alias("lang"),
     )
 
 
@@ -169,16 +153,4 @@ def pii_stats(docs: DataFrame) -> DataFrame:
         "doc_id",
         F.regexp_count("text", F.lit(URL_RE)).cast("long").alias("url_count"),
         F.regexp_count("text", F.lit(EMAIL_RE)).cast("long").alias("email_count"),
-    )
-
-
-def fingerprint(docs: DataFrame) -> DataFrame:
-    """Document fingerprint: md5 of whitespace-normalised lowercase text
-    (reference stable_id idea, /root/reference/scripts/seed_influx.jl:534-536,
-    with md5 instead of sha1 for engine portability)."""
-    # explicit class == RE2 \s (DuckDB); Java \s would also eat \x0B
-    norm = F.lower(F.regexp_replace(F.col("text"), "[ \t\n\f\r]+", " "))
-    return docs.select(
-        "doc_id",
-        F.substring(F.md5(norm), 1, 16).alias("fingerprint"),
     )
