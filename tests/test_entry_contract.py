@@ -15,7 +15,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 DRIVER_WINDOW = 50
 
 
-def test_every_query_inside_driver_window():
+def test_due_queries_inside_driver_window():
+    """Every query is due every round: the whole surface fits the window."""
     import __spark_entry__ as m
 
     n = len(m.queries())
@@ -23,6 +24,15 @@ def test_every_query_inside_driver_window():
         f"{n} queries but the driver checks only the first {DRIVER_WINDOW}: "
         f"{list(m.queries())[DRIVER_WINDOW:]} would never be checked"
     )
+
+
+def test_dark_tail_is_rotatable_only():
+    """No query may be rotated out of the window, so the dark tail (the
+    entries past the first 50) must be empty."""
+    import __spark_entry__ as m
+
+    tail = list(m.queries())[DRIVER_WINDOW:]
+    assert not tail, f"queries past the driver's {DRIVER_WINDOW}-row window: {tail}"
 
 
 def test_every_query_has_oracle_or_documented_fixture():
