@@ -147,11 +147,11 @@ def test_manifest_watermarks_match_written_files(spark, base_dir):
     manifests = run_pipeline(spark, base_dir, with_timeline=False)
     for m in manifests:
         for tier in (0, 1, 2):
-            path = os.path.join(
-                base_dir, "rollup", f"tier={tier}", f"bucket={m['bucket']}"
-            )
             actual = (
-                spark.read.parquet(path).agg(F.max("window_idx")).collect()[0][0]
+                read_tier(spark, base_dir, tier)
+                .filter(F.col("bucket") == m["bucket"])
+                .agg(F.max("window_idx"))
+                .collect()[0][0]
             )
             assert m["watermarks"][f"tier{tier}_max_window_idx"] == int(actual), (
                 m["bucket"], tier
@@ -203,3 +203,55 @@ def test_stored_n_tok_never_disagrees_with_tokens(spark, tmp_path):
     for tier in (0, 1, 2):
         written = read_tier(spark, base, tier).agg(F.max("window_idx")).collect()[0][0]
         assert manifest["watermarks"][f"tier{tier}_max_window_idx"] == written
+
+
+def test_direction5_crash_before_manifest_commit_resumes_clean(
+    spark, tokens_df, tmp_path, monkeypatch
+):
+    """ROADMAP direction 5 fault injection: a bucket dies after its
+    rollup write but before its manifest commit.  A resumed run redoes
+    that bucket only, leaves exactly one manifest per bucket, and every
+    tier reads back equal to a run that never crashed."""
+    import tsc_spark.plans.pipeline as pipeline
+
+    clean = str(tmp_path / "clean")
+    ingest(spark, tokens_df, clean, n_buckets=2)
+    run_pipeline(spark, clean, with_timeline=False, with_encoded=False)
+
+    crashed = str(tmp_path / "crashed")
+    ingest(spark, tokens_df, crashed, n_buckets=2)
+
+    def die(mpath, manifest):
+        raise RuntimeError("killed before the manifest commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "_commit_manifest", die)
+        with pytest.raises(RuntimeError, match="manifest commit"):
+            run_pipeline(spark, crashed, with_timeline=False, with_encoded=False)
+    assert pipeline_metrics(crashed) == []
+    assert read_tier(spark, crashed, 0).count() > 0  # the rollup write had landed
+
+    resumed = run_pipeline(spark, crashed, with_timeline=False, with_encoded=False)
+    assert [m["bucket"] for m in resumed] == [0, 1]
+    assert sorted(os.listdir(os.path.join(crashed, "_checkpoints"))) == [
+        "bucket=00000.json",
+        "bucket=00001.json",
+    ]
+    assert [m["bucket"] for m in pipeline_metrics(crashed)] == [0, 1]
+    for tier in (0, 1, 2):
+        assert _tier_snapshot(spark, crashed, tier) == _tier_snapshot(spark, clean, tier)
+
+
+def test_refuses_base_dir_of_another_layout_version(spark, base_dir):
+    """A base dir ingested under another rollup layout is refused, not
+    half-read next to the current one."""
+    import json
+
+    meta_path = os.path.join(base_dir, "_ingest.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    meta["version"] = 1
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="layout version 1"):
+        run_pipeline(spark, base_dir, with_timeline=False, with_encoded=False)

@@ -149,19 +149,83 @@ def test_swap_recovery_restores_interrupted_swap(tmp_path):
     from tsc_spark.operators.retention import recover_swapped_dir, swap_in_dir
 
     path = str(tmp_path / "sink")
+    backup = str(tmp_path / ".sink.swap_old")
     # simulate the crash window: path missing, backup holds the data
-    os.makedirs(path + ".swap_old")
-    open(os.path.join(path + ".swap_old", "part-0"), "w").write("history")
+    os.makedirs(backup)
+    open(os.path.join(backup, "part-0"), "w").write("history")
     recover_swapped_dir(path)
     assert os.path.isdir(path)
     assert open(os.path.join(path, "part-0")).read() == "history"
-    assert not os.path.isdir(path + ".swap_old")
+    assert not os.path.isdir(backup)
 
     # a normal swap with a stale backup lying around still succeeds
-    os.makedirs(path + ".swap_old")
+    os.makedirs(backup)
     tmp = str(tmp_path / "new")
     os.makedirs(tmp)
     open(os.path.join(tmp, "part-1"), "w").write("swept")
     swap_in_dir(path, tmp)
     assert open(os.path.join(path, "part-1")).read() == "swept"
-    assert not os.path.isdir(path + ".swap_old")
+    assert not os.path.isdir(backup)
+
+
+def test_crash_after_swap_rename_in_leaves_tiers_readable(
+    spark, tokens_df, tmp_path, monkeypatch
+):
+    """A crash after swap_in_dir's rename-in but before the backup is
+    removed leaves the backup beside the bucket's rollup dir.  Partition
+    discovery must not read it as one more bucket: every tier reads
+    back exactly as after a sweep that did not crash."""
+    import shutil
+
+    def swept(name, crash):
+        base = str(tmp_path / name)
+        ingest(spark, tokens_df, base, n_buckets=1)
+        run_pipeline(spark, base, with_timeline=False, with_encoded=False)
+        if not crash:
+            apply_retention(spark, base, DEFAULT_RETENTION_POLICY)
+            return base
+
+        def die(path, *args, **kwargs):
+            raise OSError("killed before the backup was removed")
+
+        with monkeypatch.context() as m:
+            m.setattr(shutil, "rmtree", die)
+            with pytest.raises(OSError, match="backup"):
+                apply_retention(spark, base, DEFAULT_RETENTION_POLICY)
+        # the crash window was hit: a swap backup is still on disk
+        leftovers = [d for _, dirs, _ in os.walk(base) for d in dirs if d.endswith(".swap_old")]
+        assert leftovers, "the injected crash did not land inside swap_in_dir"
+        return base
+
+    clean, crashed = swept("clean", crash=False), swept("crashed", crash=True)
+    for tier in (0, 1, 2):
+        got = read_tier(spark, crashed, tier)
+        want = read_tier(spark, clean, tier)
+        assert dict(got.dtypes) == dict(want.dtypes)
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_sweep_rerun_heals_swap_killed_between_renames(spark, tokens_df, tmp_path, monkeypatch):
+    """A sweep killed between swap_in_dir's two renames leaves the
+    bucket's rollup dir missing and its data in the hidden backup.  The
+    next sweep restores it before reading, so no bucket drops out."""
+    base = str(tmp_path / "ret")
+    ingest(spark, tokens_df, base, n_buckets=1)
+    run_pipeline(spark, base, with_timeline=False, with_encoded=False)
+    apply_retention(spark, base, DEFAULT_RETENTION_POLICY)
+    want = {t: sorted(map(tuple, read_tier(spark, base, t).collect())) for t in (0, 1, 2)}
+
+    real_rename = os.rename
+
+    def die_on_rename_in(src, dst):
+        if src.endswith(".retention_tmp"):
+            raise OSError("killed between the renames")
+        real_rename(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", die_on_rename_in)
+        with pytest.raises(OSError, match="between the renames"):
+            apply_retention(spark, base, DEFAULT_RETENTION_POLICY)
+    apply_retention(spark, base, DEFAULT_RETENTION_POLICY)
+    got = {t: sorted(map(tuple, read_tier(spark, base, t).collect())) for t in (0, 1, 2)}
+    assert got == want

@@ -28,6 +28,9 @@ physical layout, ``drop`` segments translate to partition drops
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -42,15 +45,20 @@ __all__ = [
 ]
 
 
+def _hidden_sibling(path: str, suffix: str) -> str:
+    """``<parent>/.<name><suffix>``: Spark's partition discovery skips
+    dot-prefixed names, so a backup or temp dir beside a partition dir
+    (``bucket=<b>``) is never read as one more partition."""
+    parent, name = os.path.split(os.path.normpath(path))
+    return os.path.join(parent, f".{name}{suffix}")
+
+
 def recover_swapped_dir(path: str) -> None:
     """Crash recovery for ``swap_in_dir``: if a previous swap died
     between its two renames, ``path`` is missing and the backup holds
     the data — restore it.  A stale backup alongside an intact ``path``
     means the swap completed; drop it."""
-    import os
-    import shutil
-
-    old = path + ".swap_old"
+    old = _hidden_sibling(path, ".swap_old")
     if os.path.isdir(old):
         if not os.path.isdir(path):
             os.rename(old, path)  # the interrupted swap's data, restored
@@ -67,11 +75,8 @@ def swap_in_dir(path: str, tmp: str) -> None:
     backup — which ``recover_swapped_dir`` (called here on entry, and
     callable at startup) restores, so the failure mode is "sweep didn't
     happen", never data loss or a permanently wedged sink."""
-    import os
-    import shutil
-
     recover_swapped_dir(path)
-    old = path + ".swap_old"
+    old = _hidden_sibling(path, ".swap_old")
     if os.path.isdir(path):
         os.rename(path, old)
     os.rename(tmp, path)
@@ -149,20 +154,27 @@ def apply_retention(
 ) -> list[dict]:
     """Execute the sweep over the bucketed pipeline layout.
 
-    Per bucket and tier: read the rollup segment files, keep survivors,
-    atomically replace the tier directory, and append a ``retention``
-    record (policy, rows dropped, new watermarks) to the bucket
-    manifest.  Sandbox-scale executor for the same plan a cluster
+    Per bucket: read the rollup once (``tier`` is a partition column),
+    keep survivors of every tier in one sweep, write them once
+    partitioned by tier, swap the bucket directory in, and append a
+    ``retention`` record (policy, rows before/after per policy tier) to
+    the bucket manifest.  Tiers absent from the policy pass through
+    unchanged.  A whole-bucket rewrite executing the same plan a cluster
     deployment would push down to partition drops."""
     import json
-    import os
 
-    from ..plans.pipeline import _manifest_path, read_tier  # layout owners
+    from ..plans.pipeline import (  # layout owners
+        _commit_manifest,
+        _manifest_path,
+        _n_buckets,
+        _rollup_dir,
+    )
 
     pol = DEFAULT_RETENTION_POLICY if policy is None else policy
-    with open(os.path.join(base_dir, "_ingest.json")) as f:
-        n_buckets = json.load(f)["n_buckets"]
-    todo = buckets if buckets is not None else range(n_buckets)
+    todo = buckets if buckets is not None else range(_n_buckets(base_dir))
+
+    def tier_counts(df: DataFrame) -> dict[int, int]:
+        return {r["tier"]: r["count"] for r in df.groupBy("tier").count().collect()}
 
     results = []
     for bucket in todo:
@@ -170,31 +182,26 @@ def apply_retention(
         if not os.path.exists(mpath):
             continue
         record = {"bucket": bucket, "policy": {str(k): v for k, v in pol.items()}, "tiers": {}}
-        for tier in sorted(pol):
-            path = os.path.join(base_dir, "rollup", f"tier={tier}", f"bucket={bucket}")
-            if not os.path.isdir(path):
-                continue
-            df = spark.read.parquet(path).withColumn("tier", F.lit(tier))
-            before = df.count()
-            # keep the tier column: _process_bucket wrote it into every
-            # rollup file, and dropping it here would leave swept buckets
-            # with a different schema than unswept ones (read_tier merges
-            # both, surfacing NULL/missing tier nondeterministically)
+        path = _rollup_dir(base_dir, bucket)
+        recover_swapped_dir(path)  # an earlier sweep may have died mid-swap
+        if os.path.isdir(path):
+            df = spark.read.parquet(path)
+            before = tier_counts(df)
             survivors = retention_sweep(df, pol).cache()
-            after = survivors.count()
-            tmp = path + ".retention_tmp"
-            survivors.write.mode("overwrite").parquet(tmp)
+            after = tier_counts(survivors)
+            tmp = _hidden_sibling(path, ".retention_tmp")
+            survivors.write.partitionBy("tier").mode("overwrite").parquet(tmp)
             survivors.unpersist()
             # swap: readers see old or new, never a partial dir; crash
             # recovery via recover_swapped_dir (see swap_in_dir)
             swap_in_dir(path, tmp)
-            record["tiers"][str(tier)] = {"rows_before": before, "rows_after": after}
+            record["tiers"] = {
+                str(t): {"rows_before": before[t], "rows_after": after.get(t, 0)}
+                for t in sorted(pol) if t in before
+            }
         with open(mpath) as f:
             manifest = json.load(f)
         manifest.setdefault("retention", []).append(record)
-        tmp_m = mpath + ".tmp"
-        with open(tmp_m, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp_m, mpath)
+        _commit_manifest(mpath, manifest)
         results.append(record)
     return results

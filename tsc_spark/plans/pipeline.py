@@ -4,11 +4,20 @@ The unit of work and of checkpointing is a **doc-hash bucket**:
 ``bucket = pmod(xxhash64(doc_id), n_buckets)``.  Ingest writes the corpus
 once, hive-partitioned by bucket; every later stage reads a single
 bucket directory (partition pruning — no re-scan of the other 100 TB /
-n_buckets).  After a bucket's outputs are committed, a manifest JSON
-records its lineage (doc_id range, doc/point counts, per-tier window
-watermarks) and per-bucket metrics; a resumed run skips every bucket
-with a manifest — the file-level equivalent of
+n_buckets).  A bucket's tiers are one ``tiered_rollups`` frame written
+by one job with ``partitionBy("tier")``, so the layout is
+``rollup/bucket=<b>/tier=<t>``: one Arrow pass per bucket, and the
+retention sweep (operators.retention) rewrites a bucket with one read,
+one write and one directory swap.  After a bucket's outputs are
+committed, a manifest JSON records its lineage (doc_id range, doc/point
+counts, per-tier window watermarks) and per-bucket metrics; a resumed
+run skips every bucket with a manifest — the file-level equivalent of
 ``source LEFT ANTI JOIN done_partitions`` (SURVEY §2.3).
+
+This module alone knows the layout: ``read_tier`` reads a tier through
+partition pruning, and ``apply_retention`` goes through the private
+helpers below (a bucket's rollup dir, ``n_buckets``, the manifest
+commit) instead of spelling paths itself.
 
 At cluster scale, buckets map to independent jobs that can be retried /
 scheduled separately; n_buckets is chosen so one bucket ≈ a few hundred
@@ -31,6 +40,9 @@ from ..operators.rollup import tiered_rollups
 
 __all__ = ["ingest", "run_pipeline", "read_tier", "pipeline_metrics"]
 
+# 2: rollup/bucket=<b>/tier=<t> (1 was rollup/tier=<t>/bucket=<b>)
+_LAYOUT_VERSION = 2
+
 
 def _manifest_dir(base_dir: str) -> str:
     return os.path.join(base_dir, "_checkpoints")
@@ -38,6 +50,33 @@ def _manifest_dir(base_dir: str) -> str:
 
 def _manifest_path(base_dir: str, bucket: int) -> str:
     return os.path.join(_manifest_dir(base_dir), f"bucket={bucket:05d}.json")
+
+
+def _commit_manifest(mpath: str, manifest: dict) -> None:
+    """Atomic commit: the manifest appears whole or not at all."""
+    tmp = mpath + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(manifest, f, indent=1)
+    os.replace(tmp, mpath)
+
+
+def _rollup_dir(base_dir: str, bucket: int) -> str:
+    """One bucket's tiers, as ``tier=<t>`` partitions."""
+    return os.path.join(base_dir, "rollup", f"bucket={bucket}")
+
+
+def _n_buckets(base_dir: str) -> int:
+    """``n_buckets`` from the ingest record; a base dir written in
+    another layout is refused rather than half-read."""
+    with open(os.path.join(base_dir, "_ingest.json")) as f:
+        meta = json.load(f)
+    if meta.get("version") != _LAYOUT_VERSION:
+        raise ValueError(
+            f"{base_dir} has pipeline layout version {meta.get('version')}, "
+            f"this code reads only version {_LAYOUT_VERSION}; re-run ingest "
+            "into a fresh base dir"
+        )
+    return meta["n_buckets"]
 
 
 def ingest(
@@ -66,7 +105,7 @@ def ingest(
         .mode("overwrite")
         .parquet(out)
     )
-    meta = {"n_buckets": n_buckets, "format": "parquet", "version": 1}
+    meta = {"n_buckets": n_buckets, "format": "parquet", "version": _LAYOUT_VERSION}
     os.makedirs(base_dir, exist_ok=True)
     with open(os.path.join(base_dir, "_ingest.json"), "w") as f:
         json.dump(meta, f)
@@ -116,16 +155,13 @@ def _process_bucket(
     # so the per-tier watermark derives from max(n_tok) — no re-read of
     # the just-written parquet
     max_n_tok = int(stats["max_n_tok"] or 0)
-    watermarks: dict[str, int] = {}
-
-    # shuffle-free rollup, one write per tier: the layout stays
-    # rollup/tier=t/bucket=b with the tier column inside every file
-    # (apply_retention and read_tier rely on it)
-    for tier, stride in TIER_STRIDES.items():
-        path = os.path.join(base_dir, "rollup", f"tier={tier}", f"bucket={bucket}")
-        tiered_rollups(df, tiers=(tier,)).write.mode("overwrite").parquet(path)
-        wm = -(-max_n_tok // stride) - 1 if max_n_tok > 0 else -1
-        watermarks[f"tier{tier}_max_window_idx"] = wm
+    watermarks = {
+        f"tier{tier}_max_window_idx": -(-max_n_tok // stride) - 1 if max_n_tok > 0 else -1
+        for tier, stride in TIER_STRIDES.items()
+    }
+    tiered_rollups(df).write.partitionBy("tier").mode("overwrite").parquet(
+        _rollup_dir(base_dir, bucket)
+    )
 
     if with_timeline:
         tl = cluster_timeline(df, merge_threshold_ratio)
@@ -166,8 +202,7 @@ def run_pipeline(
 
     ``resume=True`` skips buckets whose checkpoint manifest exists, so a
     killed run restarts without duplicate work."""
-    with open(os.path.join(base_dir, "_ingest.json")) as f:
-        n_buckets = json.load(f)["n_buckets"]
+    n_buckets = _n_buckets(base_dir)
     os.makedirs(_manifest_dir(base_dir), exist_ok=True)
 
     requested = {"rollup"} | ({"timeline"} if with_timeline else set()) | (
@@ -195,16 +230,15 @@ def run_pipeline(
         # outputs produced by an earlier run over the same bucket data
         # remain valid on disk — record the union
         manifest["outputs"] = sorted(set(manifest["outputs"]) | done)
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, mpath)  # atomic commit: manifest == bucket done
+        _commit_manifest(mpath, manifest)  # manifest == bucket done
         written.append(manifest)
     return written
 
 
 def read_tier(spark: SparkSession, base_dir: str, tier: int) -> DataFrame:
-    return spark.read.parquet(os.path.join(base_dir, "rollup", f"tier={tier}"))
+    """One tier across all buckets (``tier`` and ``bucket`` are partition
+    columns; the filter prunes the other tiers' files)."""
+    return spark.read.parquet(os.path.join(base_dir, "rollup")).filter(F.col("tier") == tier)
 
 
 def pipeline_metrics(base_dir: str) -> list[dict]:
